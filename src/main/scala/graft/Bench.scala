@@ -58,7 +58,21 @@ object Bench {
     */
   val ModeChangedSinceR16: Set[String] = Set.empty
 
+  /** Wipe the artifact root `dir` and point the session's published-
+    * artifacts mode at it: a leftover artifact from a prior run must not
+    * stand in for this run's warmup publish. Shared by the harnesses.
+    */
+  def useFreshArtifacts(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(): Unit
+    }
+    rm(new java.io.File(dir))
+    spark.conf.set("spark.graft.artifacts", dir)
+  }
+
   def main(args: Array[String]): Unit = {
+    val startedAt = java.time.Instant.now()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Host-contention probes (HostLoad): sampled BEFORE the session so
     // the loadavg reading isn't polluted by our own 32 threads, and the
@@ -73,15 +87,8 @@ object Bench {
     // models. q_dedup_clusters itself always computes inline, so the
     // cluster-build cost remains a timed, visible line; what disappears
     // is only the duplicated recompute. Disclosed via the "artifacts"
-    // field below. The dir is wiped first: a leftover artifact from a
-    // prior run must not stand in for this run's warmup publish.
-    val artDir = new java.io.File("target/bench_artifacts")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    if (artDir.exists()) rm(artDir)
-    spark.conf.set("spark.graft.artifacts", artDir.toString)
+    // field below.
+    useFreshArtifacts(spark, "target/bench_artifacts")
     def runOne(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
       catch { case e: Throwable =>
@@ -146,24 +153,14 @@ object Bench {
     // line-tail record (BENCH_r10 lost its own headline total to
     // truncation) — so the STDOUT line is a compact summary whose
     // fields all survive, and the full ascending per-query map goes to
-    // a repo-committed BENCH_DETAIL_r{N}.json the judge reads directly.
-    // The round number is inferred from the driver's committed
-    // BENCH_r{N}.json artifacts (this run belongs to max+1).
-    val round = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-      .flatMap(f => "^BENCH_r(\\d+)\\.json$".r.findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      .foldLeft(0)(math.max) + 1
-    // Never overwrite an existing detail file (r19: the driver's second
-    // same-round run clobber-named the NEXT round's file). First run of
-    // a round gets the round name; later runs get _2, _3, ... — each
-    // run's stdout line carries its own `detail` field, so nothing is
-    // ambiguous. SPARK_GRAFT_BENCH_DETAIL overrides outright.
-    val detailName = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", {
-      val base = f"BENCH_DETAIL_r$round%02d"
-      Iterator.from(1)
-        .map(i => if (i == 1) s"$base.json" else s"${base}_$i.json")
-        .find(n => !new java.io.File(n).exists())
-        .get
-    })
+    // a detail file committed next to it. The caller names it via
+    // SPARK_GRAFT_BENCH_DETAIL; otherwise it is named by the run's UTC
+    // start time, never inferred from other files (a name inferred from
+    // the committed BENCH_r{N}.json set mislabelled runs), and the
+    // stdout line's `detail` field reports which file this run wrote.
+    val detailName = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
+      "BENCH_DETAIL_" + java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd'T'HHmmss'Z'")
+        .withZone(java.time.ZoneOffset.UTC).format(startedAt) + ".json")
     val qsFull = fmtQs(results.toSeq.sortBy { case (k, v) => (v, k) })
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(detailName),
