@@ -79,7 +79,10 @@ object Staging {
       case Some(dir) =>
         val path = s"$dir/stage_${name}_${counter.incrementAndGet()}"
         df.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path)
+        // The schema is the one just written: reading it back with it
+        // skips the footer-inference job (the path is new on every
+        // call, so the `Tables.read` memo could never hit here).
+        df.sparkSession.read.schema(df.schema).parquet(path)
       case None =>
         if (columnarCache) {
           // The conf flip below temporarily mutates SESSION-global

@@ -44,6 +44,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   granularity is indistinguishable from the original — the lake-less
   *   stand-in accepts this; a real table format's snapshot id does not
   *   have the gap. Input tables here are immutable test fixtures.
+  *   `graft.Tables.read`'s schema memo keys on the same digest and
+  *   shares the gap, which is why it serves only the fixture tables and
+  *   the committed `fp=` directories read here, neither of which is
+  *   rewritten in place.
   */
 object Artifacts {
 
@@ -109,7 +113,7 @@ object Artifacts {
     if (!committed(spark, path)) None
     else {
       onBeforeConsume(name, path)
-      try Some(spark.read.parquet(path))
+      try Some(graft.Tables.read(spark, path))
       catch {
         case scala.util.control.NonFatal(e) if !committed(spark, path) =>
           System.err.println(

@@ -39,6 +39,23 @@ trait SparkSpec extends AnyFunSuite {
     walk(df.queryExecution.executedPlan)
     sb.toString
   }
+
+  /** Spark jobs started while `f` runs; the listener bus is drained on
+    * both sides, since its events arrive asynchronously.
+    */
+  def jobsDuring(f: => Unit): Int = {
+    import org.apache.spark.GraftBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    GraftBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { f; GraftBus.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
 }
 
 object SparkSpec {

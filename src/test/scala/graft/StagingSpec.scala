@@ -27,6 +27,26 @@ class StagingSpec extends SparkSpec {
     }
   }
 
+  test("scratch read-back keeps the written schema and rows and runs no inference job") {
+    val df = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
+    val dir = Files.createTempDirectory("graft_scratch_schema").toString
+    // The write alone, to a path of its own, sets how many jobs staging
+    // may run: one more would be the footer-inference job.
+    val writeJobs = jobsDuring(df.write.parquet(s"$dir/plain"))
+    spark.conf.set("spark.graft.scratch", dir)
+    try {
+      var staged: org.apache.spark.sql.DataFrame = null
+      val stageJobs = jobsDuring { staged = Staging.staged(df, "schema_probe") }
+      assert(stageJobs == writeJobs, s"staging ran $stageJobs jobs, the write alone $writeJobs")
+      val path = new java.io.File(dir).listFiles().map(_.getPath)
+        .filter(_.contains("stage_schema_probe_")).head
+      assert(staged.schema == spark.read.parquet(path).schema,
+        "read-back must carry the schema that inference would give")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.orderBy("doc_id").collect().map(_.toSeq).toSeq
+      assert(rows(staged) == rows(df))
+    } finally spark.conf.unset("spark.graft.scratch")
+  }
+
   test("persist mode: AQE cache by default, columnar cache on explicit opt-in, conf restored") {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     spark.catalog.clearCache()
